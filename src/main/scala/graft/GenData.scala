@@ -46,8 +46,8 @@ import org.apache.spark.sql.functions._
 object GenData {
 
   /** The 30-word document vocabulary, shared with every harness that
-    * plants synthetic docs into a generated corpus
-    * ([[ProfileStratRecall]]): planted text must blend into the
+    * plants synthetic docs into a generated corpus (the stratified
+    * recall curve in SCALING.md): planted text must blend into the
     * corpus's measured background similarity, so the vocabulary lives
     * in ONE place — a private copy that drifted would silently turn
     * planted docs into an easy-to-find private vocabulary and make

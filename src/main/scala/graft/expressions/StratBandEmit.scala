@@ -24,8 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *    for i in [0, b) — the doc betting it is the SMALLER side.
   *  - `asSmall = false`: for each arm with g > 0 whose partner c−g is
   *    occupied, (ci=c−g, cj=c, i, bandHash_i) — the LARGER side; a
-  *    gap-0 arm contributes its small-role rows (ci=cj=c) here
-  *    instead, exactly the union shape (gap 0 joins small vs small).
+  *    gap-0 arm whose class c is occupied contributes its small-role
+  *    rows (ci=cj=c) here instead, exactly the union shape (gap 0
+  *    joins small vs small).
   *
   * Band hashes come from [[BandHashes.compute]] — the ONE definition
   * of the fold, so this emitter is bit-identical per arm to
@@ -85,16 +86,17 @@ object StratBandEmit {
   private def occupied(mask: Long, c: Int): Boolean =
     c >= 0 && c < 64 && ((mask >>> c) & 1L) == 1L
 
-  /** Does this (arm, role) emit for a document of class `cls`? The
-    * document's own class is occupied by construction (it IS corpus);
-    * what gates emission is the PARTNER class — zero-partner roles
-    * emitted tens of GB for empty joins before this filter (measured,
-    * round 10; carried over from the union's eligibility sets).
+  /** Does this (arm, role) emit for a document of class `cls`? What
+    * gates emission is the PARTNER class — zero-partner roles emitted
+    * tens of GB for empty joins before this filter (measured, round
+    * 10; carried over from the union's eligibility sets). For gap 0
+    * the partner is the document's own class: occupied by construction
+    * when the mask comes from the same frame as `cls`, and still
+    * checked, as the union did, for a mask derived elsewhere.
     */
   private def emits(cls: Int, g: Int, mask: Long, asSmall: Boolean): Boolean =
     if (asSmall) occupied(mask, cls + g)
-    else if (g == 0) true // gap-0 small-role rows route to the large side
-    else occupied(mask, cls - g)
+    else occupied(mask, cls - g) // gap 0: small-role rows on the large side
 
   /** Shared by eval and generated code — one definition of the emit. */
   def compute(mh: ArrayData, cls: Int, arms: Array[Int],
@@ -113,16 +115,15 @@ object StratBandEmit {
       if (emits(cls, g, mask, asSmall)) {
         val r = arms(k + 1)
         val b = arms(k + 2)
-        val ci = if (asSmall || g == 0) cls else cls - g
+        val ci = if (asSmall) cls else cls - g
         val cj = if (asSmall) cls + g else cls
         // the ONE band-hash fold definition — bit-identical per arm to
         // posexplode(BandHashes(mh, r, b)) in the union it replaces
         val hashes = BandHashes.compute(mh, r, b)
-          .asInstanceOf[GenericArrayData].array
         var i = 0
         while (i < b) {
-          out(o) = new GenericInternalRow(
-            Array[Any](ci, cj, i, hashes(i)))
+          val h = if (hashes.isNullAt(i)) null else hashes.getLong(i)
+          out(o) = new GenericInternalRow(Array[Any](ci, cj, i, h))
           o += 1
           i += 1
         }

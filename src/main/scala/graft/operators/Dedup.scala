@@ -827,10 +827,9 @@ object Dedup {
   private[graft] val MinArmRecall = 0.5
 
   /** The stratified generator's corpus probe, shared verbatim with
-    * ProfileStratBudget (round-13 ADVICE: the tool advertised "the
-    * guard's real decision boundary" while carrying a COPY of this
-    * logic — one definition keeps that claim true if the jBg formula
-    * or class binning ever changes). Two bounded driver-side reads of
+    * the budget spec (one definition keeps the spec on the guard's
+    * real decision boundary if the jBg formula or class binning ever
+    * changes). Two bounded driver-side reads of
     * the caller-persisted fingerprint table: the ≤64-row size-class
     * histogram and one (count, approx vocab) aggregate.
     */
@@ -862,7 +861,7 @@ object Dedup {
   }
 
   /** [[corpusProbe]] from a raw fingerprint table (doc_id, h) — the
-    * ProfileStratBudget entry point; derives the per-doc size/class
+    * budget spec's entry point; derives the per-doc size/class
     * frame exactly as the operator's signature aggregate does.
     */
   private[graft] def corpusProbeOnFps(tri: DataFrame): CorpusProbe =
@@ -940,13 +939,12 @@ object Dedup {
       .withColumn("cls", floor(log2(col("s"))).cast("int"))
       .persist()
     try {
-      // bounded probes ([[corpusProbe]] — shared with
-      // ProfileStratBudget): the ≤64-row class histogram (which also
-      // materializes the signature cache all 2(G+1) emission branches
-      // re-read) and the corpus background-similarity estimate — the
-      // occurrence/vocabulary aggregate reads a per-row re-shingling
-      // scan (one pass, no shuffle, no cache) instead of an exploded
-      // fingerprint table
+      // bounded probes ([[corpusProbe]]): the ≤64-row class
+      // histogram (which also materializes the signature cache all
+      // 2(G+1) emission branches re-read) and the corpus
+      // background-similarity estimate — the occurrence/vocabulary
+      // aggregate reads a per-row re-shingling scan (one pass, no
+      // shuffle, no cache) instead of an exploded fingerprint table
       val probe = corpusProbe(sigs, docs.select(
         explode(column(graft.expressions.ShingleFingerprints(
           expression(col("text"))))).as("h")))
@@ -1653,34 +1651,18 @@ object Dedup {
     * via one doc_id equi-join, then BOTH window functions (size,
     * rank) share the single component-keyed exchange.
     */
-  def canonicalize(documents: DataFrame, pairs: DataFrame): DataFrame =
-    canonicalizeOnComps(documents,
-      connectedComponents(documents, pairs)
-        .select(col("doc_id"), col("component")),
-      repartitionFirst = false)
-
-  /** The window stage over already-attached component labels — split
-    * out so ProfileCanon can A/B its plan shape against precomputed
-    * components (the pair source dominates the full operator; the
-    * window question needs the surgical cut). `repartitionFirst`
-    * mirrors [[graft.operators.TextOps]]' `topKByScore` arms: force
-    * the component exchange + sort before the windows instead of
-    * letting EnsureRequirements place them (VERDICT r12 #3 — measured
-    * in SCALING.md round 13; the BARE shape ships: with no rank
-    * FILTER over the window there is no InferWindowGroupLimit partial
-    * pass here, so both arms plan one exchange + one sort and the A/B
-    * confirms parity).
-    */
-  private[graft] def canonicalizeOnComps(documents: DataFrame,
-      comps: DataFrame, repartitionFirst: Boolean): DataFrame = {
+  def canonicalize(documents: DataFrame, pairs: DataFrame): DataFrame = {
+    val comps = connectedComponents(documents, pairs)
+      .select(col("doc_id"), col("component"))
+    // the bare window shape: EnsureRequirements places the one
+    // component exchange + sort. With no rank FILTER over the window
+    // there is no InferWindowGroupLimit partial pass to avoid, so a
+    // forced repartition-first shape (TextOps.topKByScore's win)
+    // plans the same exchange + sort here — SCALING.md round 13
+    // measured the two at parity
     val wc = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-    val joined = documents.select(col("doc_id"), col("n_chars"))
+    documents.select(col("doc_id"), col("n_chars"))
       .join(comps, Seq("doc_id"))
-    val arranged =
-      if (repartitionFirst) joined.repartition(col("component"))
-        .sortWithinPartitions(col("component"), col("n_chars").desc, col("doc_id"))
-      else joined
-    arranged
       .withColumn("n_members", count(lit(1)).over(wc))
       .withColumn("rnk", row_number().over(
         wc.orderBy(col("n_chars").desc, col("doc_id"))))
@@ -1699,27 +1681,14 @@ object Dedup {
     * canonicalize: labels attach by one doc_id equi-join, the member
     * count is one component-keyed window.
     */
-  def softDedupWeights(documents: DataFrame, pairs: DataFrame): DataFrame =
-    softDedupOnComps(documents,
-      connectedComponents(documents, pairs)
-        .select(col("doc_id"), col("component")),
-      repartitionFirst = false)
-
-  /** Window stage of [[softDedupWeights]] over precomputed labels —
-    * the ProfileCanon A/B cut. Here the only window is the UNORDERED
-    * member count, so the bare shape needs no sort at all and
-    * `repartitionFirst` can only ADD one; the arm exists to measure
-    * that expectation rather than assume it.
-    */
-  private[graft] def softDedupOnComps(documents: DataFrame,
-      comps: DataFrame, repartitionFirst: Boolean): DataFrame = {
+  def softDedupWeights(documents: DataFrame, pairs: DataFrame): DataFrame = {
+    val comps = connectedComponents(documents, pairs)
+      .select(col("doc_id"), col("component"))
+    // the only window is the UNORDERED member count, so the bare shape
+    // needs no sort at all (a repartition-first shape could only add
+    // one; SCALING.md round 13 measured the two at parity)
     val wc = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-    val joined = documents.select(col("doc_id")).join(comps, Seq("doc_id"))
-    val arranged =
-      if (repartitionFirst) joined.repartition(col("component"))
-        .sortWithinPartitions(col("component"))
-      else joined
-    arranged
+    documents.select(col("doc_id")).join(comps, Seq("doc_id"))
       .withColumn("n_members", count(lit(1)).over(wc))
       .select(col("doc_id"), col("component"), col("n_members"),
         round(lit(1.0) / col("n_members").cast("double"), 6).as("weight"))

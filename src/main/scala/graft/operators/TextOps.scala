@@ -228,9 +228,9 @@ object TextOps {
     *    (repartition on the group key, then sortWithinPartitions)
     *    halves the sort work: the one post-exchange sort both
     *    satisfies the window and lets WindowGroupLimit run as a
-    *    streaming filter. Measured (ProfileTfidf, min of 2
+    *    streaming filter. Measured (round 12 A/B, min of 2
     *    interleaved passes, identical-output checksums): sf10
-    *    bare 21.1 s / repart 6.9 s / TermTopKAggregator 8.3 s;
+    *    bare 21.1 s / repart 6.9 s / bounded aggregator 8.3 s;
     *    sf100 bare 86.4 / repart 55.0 / agg 70.4 — the bounded
     *    aggregator (O(k) heap per group, no sort) LOSES at both
     *    scales: its ObjectHashAggregate falls back to sort-based
@@ -257,26 +257,10 @@ object TextOps {
       .select(col(groupCol), col("rnk"), col("w").as("term"), col("score"))
   }
 
-  /** The round-12 A/B alternative to [[topKByScore]]'s window: the
-    * bounded [[graft.functions.TopK.TermTopKAggregator]] (map-side
-    * O(k) heap per group — no sort anywhere). Kept for ProfileTfidf's
-    * committed measurement; the window arm ships (see
-    * [[topKByScore]]'s verdict).
-    */
-  private[graft] def topKByScoreAgg(scored: DataFrame, groupCol: String,
-      k: Int): DataFrame = {
-    import graft.functions.TopK
-    val tk = udaf(new TopK.TermTopKAggregator(k),
-      org.apache.spark.sql.Encoders.product[TopK.ScoredTerm])
-    scored.groupBy(col(groupCol))
-      .agg(tk(col("w"), col("score")).as("top"))
-      .select(col(groupCol), posexplode(col("top")))
-      .select(col(groupCol), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.term").as("term"), col("col.score").as("score"))
-  }
-
-  /** ProfileTfidf's window-arm handles (A = the pre-round-12 bare
-    * window, B = the shipping repartition-first shape).
+  /** Both window arms of [[topKByScore]] over the document-grouped
+    * tfidf table: `window_bare` is the pre-round-12 shape, kept as
+    * the reference the specs compare the shipped `window_repart`
+    * shape against.
     */
   private[graft] def tfidfTopTermsArm(documents: DataFrame, k: Int,
       arm: String): DataFrame = {
@@ -289,7 +273,6 @@ object TextOps {
         topKByScore(scored, "doc_id", k, corpusSizedGroups = false)
       case "window_repart" => // what tfidfTopTerms ships
         topKByScore(scored, "doc_id", k, corpusSizedGroups = true)
-      case "agg" => topKByScoreAgg(scored, "doc_id", k)
       case other => throw new IllegalArgumentException(s"unknown arm $other")
     }
     ranked.orderBy(col("doc_id"), col("rnk"))

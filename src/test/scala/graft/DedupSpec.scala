@@ -807,7 +807,8 @@ class DedupSpec extends AnyFunSuite {
     assert(occupied.size >= 3, s"fixture broken: classes $occupied")
     val arms = Seq((0, 2, 23), (1, 1, 61), (2, 1, 61), (5, 1, 64))
     // ---- reference: the union shape, verbatim from round 13 ----
-    def unionRef(asSmall: Boolean): Seq[DataFrame] = arms.flatMap { case (g, r, b) =>
+    def emitRef(arm: (Int, Int, Int), asSmall: Boolean): Option[DataFrame] = {
+      val (g, r, b) = arm
       val eligible =
         (if (asSmall) occupied.filter(c => occupied.contains(c + g))
          else occupied.filter(c => occupied.contains(c - g))).toSeq
@@ -821,14 +822,12 @@ class DedupSpec extends AnyFunSuite {
         posexplode(column(graft.expressions.BandHashes(expression(col("mh")), r, b))))
         .toDF("doc_id", "ci", "cj", "band_idx", "band_hash"))
     }
-    val refSmall = unionRef(asSmall = true).reduceLeft(_ unionByName _)
-    val refLarge = (unionRef(asSmall = false) ++
-      arms.filter(_._1 == 0).flatMap { case (g, r, b) =>
-        unionRef(asSmall = true).headOption.map(_ => // gap-0 small rows verbatim
-          sigs.select(col("doc_id"), col("cls").as("ci"), (col("cls") + g).as("cj"),
-            posexplode(column(graft.expressions.BandHashes(expression(col("mh")), r, b))))
-            .toDF("doc_id", "ci", "cj", "band_idx", "band_hash"))
-      }).reduceLeft(_ unionByName _)
+    val refSmall = arms.flatMap(emitRef(_, asSmall = true)).reduceLeft(_ unionByName _)
+    // gap 0 joins small-role against small-role: its large side is the
+    // same eligibility-filtered small-role branch
+    val refLarge = (arms.flatMap(emitRef(_, asSmall = false)) ++
+      arms.filter(_._1 == 0).flatMap(emitRef(_, asSmall = true)))
+      .reduceLeft(_ unionByName _)
     // ---- the emitter ----
     val mask = occupied.filter(c => c >= 0 && c < 64).foldLeft(0L)((m, c) => m | (1L << c))
     def emitted(asSmall: Boolean): DataFrame =
@@ -856,6 +855,12 @@ class DedupSpec extends AnyFunSuite {
     val first = out.getStruct(0, 4)
     val last = out.getStruct(22, 4)
     assert(!first.isNullAt(3) && last.isNullAt(3))
+    // the gap-0 large role is gated on the document's own class like
+    // every other role: a mask without class 3 emits nothing for it
+    assert(graft.expressions.StratBandEmit
+      .compute(shortMh, 3, Array(0, 2, 23), 1L << 4, asSmall = false).numElements() == 0)
+    assert(graft.expressions.StratBandEmit
+      .compute(shortMh, 3, Array(0, 2, 23), 1L << 3, asSmall = false).numElements() == 23)
     sigs.unpersist()
   }
 

@@ -82,7 +82,13 @@ class PlanPinSpec extends AnyFunSuite {
       "dd_exact" -> 2, // md5-keyed agg exchange, presentation sort
       "ev_session_gap" -> 2, // user-keyed window exchange, sort
       "ev_top_users" -> 1, // user agg exchange; top-k is TakeOrdered, no sort exchange
-      "q2_join_agg" -> 2) // dim broadcast (no exchange) + agg + sort
+      "q2_join_agg" -> 2, // dim broadcast (no exchange) + agg + sort
+      // labels attach by broadcast; one component-keyed exchange
+      // shared by every window, then the doc_id sort
+      "dd_canonicalize" -> 2,
+      "dd_soft_dedup" -> 2,
+      // the bucket join broadcasts at this scale; the pair sort shuffles
+      "mm_phash_pairs_mih" -> 1)
     expected.foreach { case (name, n ) =>
       val df = SparkEntry.queries(name)(spark, TestSpark.sfDir)
       assert(shuffleCount(df) == n,
@@ -92,7 +98,7 @@ class PlanPinSpec extends AnyFunSuite {
   }
 
   test("txt_tfidf_terms keeps the repartition-first top-k (one sort, above the group exchange)") {
-    // the round-12 win (ProfileTfidf: 3.1× at sf10, 1.6× at sf100)
+    // the round-12 win (3.1× at sf10, 1.6× at sf100, SCALING.md)
     // depends on Spark reusing the forced exchange+sort for the
     // window — one sort total, and WindowGroupLimit running as a
     // streaming filter over it. Nothing else pins that: a version

@@ -240,12 +240,12 @@ class TextOpsSpec extends AnyFunSuite {
     assert(out.filter(_._3 == "common").forall(_._4 == 0.0))
   }
 
-  test("grouped top-k arms agree: bare window, repartition-first window, bounded aggregator") {
+  test("grouped top-k arms agree: bare window, repartition-first window, shipped entry point") {
     // the round-12 plan change (VERDICT r11 #1): tfidfTopTerms ships
-    // the repartition-first window; this pins all three ProfileTfidf
-    // arms to identical rows INCLUDING tie and rank order, on a
-    // fixture with score ties (same tf, same df ⇒ equal scores that
-    // must break on the term) and uneven group sizes
+    // the repartition-first window; this pins it and the bare window
+    // to identical rows INCLUDING tie and rank order, on a fixture
+    // with score ties (same tf, same df ⇒ equal scores that must
+    // break on the term) and uneven group sizes
     import graft.operators.TextOps
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
@@ -257,35 +257,10 @@ class TextOpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSeq
     val bare = rows("window_bare")
     assert(rows("window_repart") == bare)
-    assert(rows("agg") == bare)
     // and the shipping entry point equals the bare-window contract
     val shipped = TextOps.tfidfTopTerms(d, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSeq
     assert(shipped == bare)
-  }
-
-  test("term top-k aggregator: NaN ranks last, ties break on the term ascending") {
-    import graft.functions.TopK
-    val agg = new TopK.TermTopKAggregator(3)
-    val items = Seq(
-      TopK.ScoredTerm("m", Double.NaN), TopK.ScoredTerm("b", 2.0),
-      TopK.ScoredTerm("z", 5.0), TopK.ScoredTerm("a", 2.0),
-      TopK.ScoredTerm("q", Double.NaN))
-    // fold in two different orders through reduce/merge — same result
-    val left = items.foldLeft(agg.zero)(agg.reduce)
-    val right = items.reverse.foldLeft(agg.zero)(agg.reduce)
-    val merged = agg.merge(
-      items.take(2).foldLeft(agg.zero)(agg.reduce),
-      items.drop(2).foldLeft(agg.zero)(agg.reduce))
-    val expect = Seq(TopK.ScoredTerm("z", 5.0),
-      TopK.ScoredTerm("a", 2.0), TopK.ScoredTerm("b", 2.0))
-    assert(agg.finish(left) == expect)
-    assert(agg.finish(right) == expect)
-    assert(agg.finish(merged) == expect)
-    // all-NaN input: keeps k, ordered by term
-    val nans = Seq("c", "a", "b").map(t => TopK.ScoredTerm(t, Double.NaN))
-    val fin = agg.finish(nans.foldLeft(agg.zero)(agg.reduce))
-    assert(fin.map(_.term) == Seq("a", "b", "c"))
   }
 
   test("bpe pair stats weight adjacent char pairs by word frequency") {
